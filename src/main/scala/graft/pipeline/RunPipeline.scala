@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.core.Sinks
@@ -36,6 +37,23 @@ import graft.operators.{Folds, Impute}
   * object only sequences them and lays out files. All frames stay
   * distributed — the only collects are fold boundaries (a handful of
   * rows) and the report rendering the reference also does driver-side.
+  *
+  * Stage boundaries. A frame read by more than one later query is built
+  * once (an eager local checkpoint, see [[Boundaries]]) so no consumer
+  * replays its lineage back to `export.xml` or the CSVs; each is released
+  * after its last consumer:
+  *  - stage-1 daily frames (Apple cardio / sleep / activity, meds, SoM,
+  *    Zepp cardio and sleep) — read by their stage-1 CSV write, the
+  *    stage-2 unify and, for Zepp cardio, `zepp_daily_features`; released
+  *    once `unified` is built. `zepp_daily_features` has one consumer,
+  *    its CSV, and is not materialised.
+  *  - `unified` — read by `daily_unified.csv` and the stage-3 labelling;
+  *    released once `labeled` is built.
+  *  - `labeled` — read by stages 4-6 and the report; released when the
+  *    run returns, since every exit path writes the report from it.
+  *  - the per-fold train / val slices — read by every ML6 family fit and
+  *    the fold guard; released after `ml6_extended_summary.csv`.
+  * Only the three Apple materialisations scan `export.xml`.
   */
 object RunPipeline {
 
@@ -112,11 +130,39 @@ object RunPipeline {
     spark.read.option("header", "true").option("inferSchema", "true")
       .option("nullValue", "").csv(paths: _*)
 
+  /** One run's stage boundaries. [[apply]] builds a frame once, by an
+    * eager local checkpoint, so every later consumer reads that copy
+    * instead of replaying its lineage back to the raw files. [[release]]
+    * drops a boundary's blocks once its last consumer has run; `run`
+    * releases whatever an early return or a failure left held. */
+  private final class Boundaries {
+    private val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def apply(df: DataFrame): DataFrame = {
+      val b = df.localCheckpoint(eager = true)
+      held += b
+      b
+    }
+    def release(dfs: DataFrame*): Unit = dfs.filter(held.contains).foreach { b =>
+      held -= b
+      b.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+        .foreach(_.unpersist(blocking = true))
+    }
+    def releaseAll(): Unit = release(held.toSeq: _*)
+  }
+
   // ---- the pipeline ----
 
   def run(spark: SparkSession, rawRoot: String, participant: String,
           snapshot: String, outDir: String,
           cfg: Config = Config()): Seq[StageLog] = {
+    val boundary = new Boundaries
+    try stages(spark, rawRoot, participant, snapshot, outDir, cfg, boundary)
+    finally boundary.releaseAll()
+  }
+
+  private def stages(spark: SparkSession, rawRoot: String, participant: String,
+                     snapshot: String, outDir: String, cfg: Config,
+                     boundary: Boundaries): Seq[StageLog] = {
     val logs = scala.collection.mutable.ArrayBuffer[StageLog]()
     val snapDate = java.time.LocalDate.parse(snapshot)
     val extracted = s"$outDir/extracted"
@@ -163,27 +209,33 @@ object RunPipeline {
 
     // ---------- stage 1: aggregate ----------
     val appleXml = findFirst(s"$extracted/apple", "export.xml")
-    val appleCardio = appleXml.map(x => ReferencePipeline.appleDailyCardio(spark, x))
-    val appleSleep = appleXml.map(x => ReferencePipeline.appleDailySleep(spark, x))
-    val appleAct = appleXml.map(x => ReferencePipeline.appleDailyActivity(spark, x))
+    val appleCardio =
+      appleXml.map(x => boundary(ReferencePipeline.appleDailyCardio(spark, x)))
+    val appleSleep =
+      appleXml.map(x => boundary(ReferencePipeline.appleDailySleep(spark, x)))
+    val appleAct =
+      appleXml.map(x => boundary(ReferencePipeline.appleDailyActivity(spark, x)))
     val medsCsv = findFirst(s"$extracted/apple", "Medications.csv")
-    val meds = medsCsv.map(p => ReferencePipeline.medsDaily(
-      spark.read.option("header", "true").csv(p), snapshot))
+    val meds = medsCsv.map(p => boundary(ReferencePipeline.medsDaily(
+      spark.read.option("header", "true").csv(p), snapshot)))
     val somCsv = findFirst(s"$extracted/apple", "StateOfMind.csv")
-    val som = somCsv.map(p => ReferencePipeline.somDaily(
-      spark.read.option("header", "true").csv(p), Some(snapshot)))
+    val som = somCsv.map(p => boundary(ReferencePipeline.somDaily(
+      spark.read.option("header", "true").csv(p), Some(snapshot))))
     val globs = Discovery.zeppGlobs(extracted)
     def zeppFiles(key: String): Seq[String] = globFiles(globs(key))
     val zeppCardio =
       if (!zeppExtracted) None
       else Some(zeppFiles("HEARTRATE") ++ zeppFiles("HEARTRATE_AUTO"))
         .filter(_.nonEmpty)
-        .map(fs => ReferencePipeline.zeppDailyCardio(readCsv(spark, fs)))
+        .map(fs => boundary(ReferencePipeline.zeppDailyCardio(readCsv(spark, fs))))
     // the reference keeps SLEEP_NAPS_*/SLEEP_INTERVALS_* files inside the
-    // SLEEP dir — split the one glob by filename
+    // SLEEP dir — split the one glob by file name (never by the directories
+    // above it: "snapshots" contains "naps")
     val sleepAll = if (zeppExtracted) zeppFiles("SLEEP") else Nil
-    val napsFiles = sleepAll.filter(_.toUpperCase.contains("NAPS"))
-    val intervalFiles = sleepAll.filter(_.toUpperCase.contains("INTERVALS"))
+    def sleepFilesNamed(part: String): Seq[String] =
+      sleepAll.filter(f => Paths.get(f).getFileName.toString.toUpperCase.contains(part))
+    val napsFiles = sleepFilesNamed("NAPS")
+    val intervalFiles = sleepFilesNamed("INTERVALS")
     val sleepDailyFiles = sleepAll.diff(napsFiles).diff(intervalFiles)
     val zeppSleep =
       Some(sleepDailyFiles).filter(_.nonEmpty).map { fs =>
@@ -201,8 +253,8 @@ object RunPipeline {
         val intervals = Some(intervalFiles).filter(_.nonEmpty)
           .map(i => spark.read.option("header", "true").option("escape", "\"")
             .csv(i: _*))
-        ReferencePipeline.zeppSleepDaily(daily, naps, cfg.homeTz, Seq("naps"),
-          intervals)
+        boundary(ReferencePipeline.zeppSleepDaily(daily, naps, cfg.homeTz,
+          Seq("naps"), intervals))
       }
     val zeppBody =
       if (!zeppExtracted) None
@@ -233,13 +285,19 @@ object RunPipeline {
     if (!stage1.exists(_._2.isDefined)) return logs.toSeq
 
     // ---------- stage 2: unify ----------
-    val unified = ReferencePipeline.unifyAllDomains(
-      ReferencePipeline.unifySleepDomains(appleSleep, zeppSleep),
+    // Zepp sleep carries zepp_slp_* columns and no quality score; its total
+    // is the unified sleep_hours (the alias the parity dump uses too)
+    val zeppSleepUnify = zeppSleep.map(_.select(col("date"),
+      col("zepp_slp_total_h").cast("double").as("sleep_hours"),
+      lit(null).cast("double").as("sleep_quality_score")))
+    val unified = boundary(ReferencePipeline.unifyAllDomains(
+      ReferencePipeline.unifySleepDomains(appleSleep, zeppSleepUnify),
       ReferencePipeline.unifyCardioDomains(appleCardio, zeppCardio),
       ReferencePipeline.unifyActivityDomains(appleAct, None),
       ReferencePipeline.unifyMedsDomain(
         meds.map(m => "apple_autoexport" -> m).toSeq),
-      ReferencePipeline.unifySomDomain(som))
+      ReferencePipeline.unifySomDomain(som)))
+    boundary.release(stage1.flatMap(_._2): _*)
     Sinks.atomicCsv(unified, s"$joined/daily_unified.csv")
     logs += StageLog(2, "unify", "success",
       s"${unified.columns.length} cols")
@@ -260,8 +318,8 @@ object RunPipeline {
       .withColumn("missing_activity",
         (!haveAny("total_steps", "total_distance", "total_active_energy"))
           .cast("int"))
-    val labeled = ReferencePipeline.labelDaily(withProvenance)
-      .localCheckpoint(true) // consumed by stages 4, 5, 6 and the report
+    val labeled = boundary(ReferencePipeline.labelDaily(withProvenance))
+    boundary.release(unified)
     Sinks.atomicCsv(labeled, s"$joined/daily_labeled.csv")
     logs += StageLog(3, "label", "success", "pbsi labels attached")
 
@@ -343,13 +401,11 @@ object RunPipeline {
       val (fid, ts, vs, ve) =
         (r.getInt(0), r.getDate(1), r.getDate(2), r.getDate(3))
       val veInclusive = r.getBoolean(5)
-      val train =
-        (if (ts == null) typed.filter(lit(false))
-         else typed.filter(col("date") >= lit(ts) && col("date") < lit(vs)))
-          .localCheckpoint(true)
-      val valD = typed.filter(col("date") >= lit(vs) &&
-          (if (veInclusive) col("date") <= lit(ve) else col("date") < lit(ve)))
-        .localCheckpoint(true)
+      val train = boundary(
+        if (ts == null) typed.filter(lit(false))
+        else typed.filter(col("date") >= lit(ts) && col("date") < lit(vs)))
+      val valD = boundary(typed.filter(col("date") >= lit(vs) &&
+          (if (veInclusive) col("date") <= lit(ve) else col("date") < lit(ve))))
       // folds whose train side is single-class can't fit — skip, as the
       // reference's fold guard does
       val fittable = train.select("som_binary").na.drop().distinct().count() >= 2 &&
@@ -404,6 +460,7 @@ object RunPipeline {
       logs += StageLog(6, "ml6-ext", "success",
         s"${extended.size} families")
     }
+    boundary.release(foldData.flatMap { case (_, tr, va, _) => Seq(tr, va) }: _*)
     logs += StageLog(7, "ml7-lstm", "skipped", "out of engine scope (SURVEY M5)")
     logs += StageLog(8, "tflite", "skipped", "out of engine scope (SURVEY M5)")
     if (primary.isEmpty)
