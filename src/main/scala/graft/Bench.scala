@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Contention gate: sample the 1-min load BEFORE Spark ramps up. A
     // quiet host sits near 0 here; anything materially above it means
     // another job (sbt compile, a ScaleCurve/probe run) shares the
@@ -20,21 +18,7 @@ object Bench {
       System.err.println(f"[bench] WARNING: load_avg $loadAtStart%.2f at " +
         "start — another job shares this host; timings will be polluted. " +
         "The output JSON carries \"contended\": true.")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Even with the UI off, the SQL status listener retains completed
-      // executions — plan graphs included — in driver memory (default
-      // 1000). Over 100+ queries x multiple actions x adaptive reruns
-      // that store is pure suite-state heap aging the later queries pay
-      // for in GC time. Keep only a handful.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     // warm up the session (codegen, file listing, parquet footers) so the
     // first timed query doesn't carry JVM/session startup.
     graft.core.Tables.names.foreach { t =>
@@ -71,30 +55,14 @@ object Bench {
     }
     val results = selected.map { case (name, fn) =>
       var failed = false
-      def once(): Double = {
-        // Per-RUN state hygiene, outside the timed window. clearCache only
-        // drops catalog-registered InMemoryRelations. Eager localCheckpoint
-        // blocks (the dedup family's deterministic-lifetime
-        // materializations) are persistent RDDs freed by the ContextCleaner
-        // only AFTER their handles are GC'd — asynchronously, i.e. the
-        // block-manager removals race the next timed run. Drop them
-        // synchronously before EVERY run, not just per query: a checkpointing
-        // query re-run 5 times by the adaptive loop otherwise accumulates 5
-        // generations of deserialized blocks on the heap, and the growing GC
-        // pressure is exactly the kind of self-inflicted drift that keeps
-        // max > 1.5×min forever (the r3 recorded-vs-plan gap).
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        System.gc()
-        val t0 = System.nanoTime()
-        try { graft.tools.TimingSink.rows(fn(spark, sfDir)) } catch {
+      // state hygiene before every run: see TimingSink.timedRun
+      def once(): Double =
+        try graft.tools.TimingSink.timedRun(spark, fn, sfDir)._1 catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             failed = true
+            -1.0
         }
-        (System.nanoTime() - t0) / 1e9
-      }
       // min over runs, adaptively extended: two runs establish the
       // baseline; while the warm runs disagree by >1.5x (a GC pause / host
       // contention hit one of them) take another shot, up to 5 total.

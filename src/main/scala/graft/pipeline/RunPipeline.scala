@@ -75,14 +75,7 @@ object RunPipeline {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4,
       "usage: graft.pipeline.RunPipeline <rawRoot> <participant> <snapshot:YYYY-MM-DD> <outDir> [zeppPassword]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Sessions.local()
     val logs = run(spark, args(0), args(1), args(2), args(3),
       Config(zeppPassword = args.lift(4)))
     logs.foreach(l =>
@@ -330,13 +323,17 @@ object RunPipeline {
 
     // ---------- stage 5: ML prep ----------
     val generatedAt = java.time.Instant.now().toString
+    val reported = StageLog(9, "report", "success", s"$outDir/RUN_REPORT.md")
+    // the report-only exit: RUN_REPORT.md without a model section
+    def reportOnly(stagesExecuted: String): Seq[StageLog] = {
+      Sinks.atomicText(spark, s"$outDir/RUN_REPORT.md",
+        Reports.runReportMd(labeled, participant, snapshot, stagesExecuted,
+          generatedAt, None))
+      (logs += reported).toSeq
+    }
     if (!labeled.columns.contains("som_category_3class")) {
       logs += StageLog(5, "ml-prep", "skipped", "no SoM domain in snapshot")
-      Sinks.atomicText(spark, s"$outDir/RUN_REPORT.md",
-        Reports.runReportMd(labeled, participant, snapshot, "0-4",
-          generatedAt, None))
-      logs += StageLog(9, "report", "success", s"$outDir/RUN_REPORT.md")
-      return logs.toSeq
+      return reportOnly("0-4")
     }
     val features = Seq("sleep_hours", "sleep_quality_score", "hr_mean",
       "hr_std", "total_steps", "total_active_energy")
@@ -376,11 +373,7 @@ object RunPipeline {
         "val_end_inclusive").collect()
     if (foldRows.isEmpty) {
       logs += StageLog(6, "ml6", "skipped", "no usable calendar folds")
-      Sinks.atomicText(spark, s"$outDir/RUN_REPORT.md",
-        Reports.runReportMd(labeled, participant, snapshot, "0-5",
-          generatedAt, None))
-      logs += StageLog(9, "report", "success", s"$outDir/RUN_REPORT.md")
-      return logs.toSeq
+      return reportOnly("0-5")
     }
     val families: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
       "logreg_balanced" -> ((tr, va) =>
@@ -463,11 +456,7 @@ object RunPipeline {
     boundary.release(foldData.flatMap { case (_, tr, va, _) => Seq(tr, va) }: _*)
     logs += StageLog(7, "ml7-lstm", "skipped", "out of engine scope (SURVEY M5)")
     logs += StageLog(8, "tflite", "skipped", "out of engine scope (SURVEY M5)")
-    if (primary.isEmpty)
-      Sinks.atomicText(spark, s"$outDir/RUN_REPORT.md",
-        Reports.runReportMd(labeled, participant, snapshot, "0-6",
-          generatedAt, None))
-    logs += StageLog(9, "report", "success", s"$outDir/RUN_REPORT.md")
-    logs.toSeq
+    // with a primary model, writeArtifacts already wrote the report
+    if (primary.isEmpty) reportOnly("0-6") else (logs += reported).toSeq
   }
 }

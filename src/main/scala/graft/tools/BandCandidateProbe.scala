@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: candidate-pair counts of the banded-LSH blocking across
   * the deep docs fixtures, per banding — the number that separates
   * "verify work grew with true duplicates" (linear) from "the banding
@@ -45,14 +43,7 @@ object BandCandidateProbe {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/tmp/graft_scale/sf10g", "/tmp/graft_scale/sf100gd",
         "/tmp/graft_scale/sfd4_20000000")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Sessions.local()
     import org.apache.spark.sql.functions.{col, min}
     val imageMode = sys.env.get("SPARK_GRAFT_BAND_IMAGE").contains("1")
     // SPARK_GRAFT_BAND_HASH=aHash64|aHash256 narrows the image sweep to

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Core-count scaling probe (dev tool, SCALING.md's sibling): run the
   * suite's heaviest queries on the SYNTHESIZED sf1g corpus (50k docs /
   * 20k vectors / 200k events — ScaleCurve's 10x step over the sf0.1
@@ -24,7 +22,7 @@ object CoreScale {
   /** The bench's heavy tail: every query that took >= ~1.5 s in the
     * round-13 committed runs and reads only documents/embeddings/events
     * (so the synthesized corpus feeds it). */
-  private val Heavy = Seq(
+  private[graft] val Heavy = Seq(
     "mm10_crossmodal_dedup", "m6_model_families", "e2e_decontam_prep",
     "e2e_corpus_assembly", "t34_quality_clf", "dd21_lsh_wide_bands",
     "t22_centrality", "e2e_c4_prep", "m1_iterative",
@@ -37,7 +35,7 @@ object CoreScale {
     * t22_centrality (output-superlinear audit form — SCALING.md's
     * structural explanation stands in for a ratio) and the
     * small-at-depth entries. */
-  private val DeepHeavy = Seq(
+  private[graft] val DeepHeavy = Seq(
     "mm10_crossmodal_dedup", "dd21_lsh_wide_bands", "dd14_simhash_corpus",
     "e2e_decontam_prep", "e2e_corpus_assembly", "e2e_llm_prep",
     "t22_prod", "mm9_wide", "dd23_incremental_prod", "t34_quality_clf",
@@ -46,15 +44,8 @@ object CoreScale {
   def main(args: Array[String]): Unit = {
     val outPath = args.headOption.getOrElse("SCALING_CORES.jsonl")
     val scale = if (args.length > 1) args(1) else "sf1g"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.core.Sessions.cores
+    val spark = graft.core.Sessions.local(cpus)
     val dir = s"/tmp/graft_scale/$scale"
     scale match {
       case "sf1g" => ScaleCurve.ensureSf1g(spark, dir)
@@ -63,6 +54,10 @@ object CoreScale {
         s"CoreScale: unknown scale '$other' (sf1g|sf10g)")
     }
     val queries = if (scale == "sf10g") DeepHeavy else Heavy
+    val unknown = queries.filterNot(graft.SparkEntry.queries.contains)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")} — " +
+        "a renamed query would silently drop out of the scaling table")
     // out-of-timing warmup: table counts + the incremental-dedup state
     graft.core.Tables.documents(spark, dir).count()
     spark.read.parquet(s"$dir/embeddings.parquet").count()
@@ -71,24 +66,15 @@ object CoreScale {
     graft.queries.TextQueries.dd23StateFixture(spark, dir)
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      val t0 = System.nanoTime()
-      TimingSink.rows(fn(spark, dir))
-      (System.nanoTime() - t0) / 1e9
-    }
-    val rows = queries.flatMap { name =>
-      graft.SparkEntry.queries.get(name).map { fn =>
-        // untimed warmup (codegen/JIT), then min of 2 timed runs —
-        // ScaleCurve's methodology
-        once(fn)
-        val t = math.min(once(fn), once(fn))
-        System.err.println(f"[corescale] $name%-24s $t%7.2f s @ $cpus cpus")
-        name -> t
-      }
+    val rows = queries.map { name =>
+      val fn = graft.SparkEntry.queries(name)
+      def once(): Double = TimingSink.timedRun(spark, fn, dir)._1
+      // untimed warmup (codegen/JIT), then min of 2 timed runs —
+      // ScaleCurve's methodology
+      once()
+      val t = math.min(once(), once())
+      System.err.println(f"[corescale] $name%-24s $t%7.2f s @ $cpus cpus")
+      name -> t
     }
     val qs = rows.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Third/fourth-docs-decade probe (dev tool): generate 5M- and (for
   * the fourth-decade set, SPARK_GRAFT_DEEP4_DOCS, default 20M — see the
   * disk note in main) deeper corpora with [[ScaleCurve]]'s generator
@@ -32,7 +30,6 @@ object DeepDocsProbe {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("dd21_lsh_prod_bands", "dd22_dedup_corpus_prod",
         "dd23_incremental_prod")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Shuffle-partition override (SPARK_GRAFT_SHUFFLE) — the task-sizing
     // knob a cluster actually turns at depth: 32 one-task-per-core
     // partitions at 50M docs put ~86M stride-1 windows in ONE hash
@@ -41,15 +38,9 @@ object DeepDocsProbe {
     // make each task's probe fit with the same 32 threads. AQE
     // coalesces the small scales back, so the knob distorts nothing
     // below the scale that needs it. Recorded in the artifact root.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Sessions.local()
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     val base = "/tmp/graft_scale/sf10g"   // 500k docs — SCALING.md's deep scale
     val deep = "/tmp/graft_scale/sf100gd" // 5M docs — one decade further
     // Fourth-decade set: the production corpus-dedup composition only by
@@ -102,19 +93,12 @@ object DeepDocsProbe {
     // already measured — a rerun then probes only what's missing.
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      def once(dir: String): (Double, Long) = {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        System.gc()
-        val t0 = System.nanoTime()
-        val n = TimingSink.rows(fn(spark, dir))
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
       // min of 2 at each scale; no untimed warm-up — at these absolute
       // sizes codegen/JIT is noise (seconds against minutes) and a third
       // full run isn't free
       def best(dir: String): (Double, Long) = {
-        val a = once(dir); val b = once(dir)
+        val a = TimingSink.timedRun(spark, fn, dir)
+        val b = TimingSink.timedRun(spark, fn, dir)
         (math.min(a._1, b._1), b._2)
       }
       // SPARK_GRAFT_DEEP5_ONLY=1 skips the base/5M/20M (re-)measurement

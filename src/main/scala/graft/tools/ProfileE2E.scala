@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stage-level wall-clock profile of the e2e compositions
@@ -36,14 +36,8 @@ import org.apache.spark.sql.functions._
 object ProfileE2E {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_scale/sf1g")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.core.Sessions.cores
+    val spark = graft.core.Sessions.local(cpus)
     import graft.pipeline.CorpusPipeline
     import graft.operators.{Dedup, TextAnalysis}
     import graft.core.Tables

@@ -361,29 +361,10 @@ object ScaleCurve {
     }
   }
 
-  /** Bench.scala's per-run hygiene: deterministic cache/checkpoint drop so
-    * one run's blocks never bleed into the next timing. */
-  private def runOnce(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
-                      dir: String): (Double, Long) = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    System.gc()
-    val t0 = System.nanoTime()
-    val rows = TimingSink.rows(fn(spark, dir))
-    ((System.nanoTime() - t0) / 1e9, rows)
-  }
-
   def main(args: Array[String]): Unit = {
     val outPath = args.headOption.getOrElse("SCALING.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.core.Sessions.cores
+    val spark = graft.core.Sessions.local(cpus)
 
     val small = "/tmp/graft_scale/sf0.1g"
     val large = "/tmp/graft_scale/sf1g"
@@ -414,15 +395,15 @@ object ScaleCurve {
     val rows = curve.map { name =>
       val fn = qs(name)
       def best(dir: String): (Double, Long) = {
-        val a = runOnce(spark, fn, dir)
-        val b = runOnce(spark, fn, dir)
+        val a = TimingSink.timedRun(spark, fn, dir)
+        val b = TimingSink.timedRun(spark, fn, dir)
         (math.min(a._1, b._1), b._2)
       }
       // untimed warm-up at the SMALL scale: codegen + JIT for this query's
       // plan compile once here, so neither scale's timed runs carry them —
       // without this the small side pays compilation the large side then
       // inherits, biasing every ratio DOWN (t2 measured 0.2x that way)
-      runOnce(spark, fn, small)
+      TimingSink.timedRun(spark, fn, small)
       val (tS, nS) = best(small)
       val (tL, nL) = best(large)
       // second decade for the dedup/sim family. Min of 2 like the first
@@ -540,9 +521,9 @@ object ScaleCurve {
         sb ++= f"| $name | $tD%.2f | $tX%.2f | ${tX / tD}%.1f | $nD | $nX |\n"
       }
       sb ++= "\ne6's round-12 row sat at ratio3 5.9 while its siblings " +
-        "held 2.3-3.3; the stage profile (`sbt \"runMain graft.tools" +
-        ".ProfileE6\"`) put 4.4 of its 9.8 s in the per-session " +
-        "collect_list aggregation — ObjectHashAggregate falls back to " +
+        "held 2.3-3.3; a round-12 stage profile put 4.4 of its 9.8 s " +
+        "in the per-session collect_list aggregation — " +
+        "ObjectHashAggregate falls back to " +
         "SORT-based aggregation past a small in-memory key threshold, " +
         "and at this fixture's gap density sessions ~ events (19M " +
         "groups). Round 13 replaced the struct collect with " +

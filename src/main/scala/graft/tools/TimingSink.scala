@@ -1,9 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The timing sink every measurement tool (Bench / ScaleCurve /
-  * DeepDocsProbe / ProfileE2E) consumes a query through.
+  * CoreScale / DeepDocsProbe / ProfileE2E / Profile) and the perfbench
+  * harness consume a query through.
   *
   * `df.count()` is NOT a valid timing sink: it wraps the plan in a new
   * count aggregate and re-optimizes, and the optimizer is then free to
@@ -27,4 +28,30 @@ import org.apache.spark.sql.DataFrame
   */
 object TimingSink {
   def rows(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** One timed run of `fn` over `dir`: (seconds, rows). The timed window
+    * covers the query's construction (eager checkpoints, driver-side
+    * fits) and [[rows]].
+    *
+    * Per-run state hygiene happens outside the window. clearCache only
+    * drops catalog-registered InMemoryRelations. Eager localCheckpoint
+    * blocks (the dedup family's deterministic-lifetime materializations)
+    * are persistent RDDs freed by the ContextCleaner only AFTER their
+    * handles are GC'd — asynchronously, i.e. the block-manager removals
+    * race the next timed run. They are dropped synchronously before
+    * EVERY run: a checkpointing query re-run 5 times by Bench's adaptive
+    * loop otherwise accumulates 5 generations of deserialized blocks on
+    * the heap, and the growing GC pressure is exactly the kind of
+    * self-inflicted drift that keeps max > 1.5×min forever (the r3
+    * recorded-vs-plan gap). */
+  def timedRun(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
+               dir: String): (Double, Long) = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+    val t0 = System.nanoTime()
+    val n = rows(fn(spark, dir))
+    ((System.nanoTime() - t0) / 1e9, n)
+  }
 }
